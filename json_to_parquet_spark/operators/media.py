@@ -616,80 +616,6 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     )
 
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("src_width", T.IntegerType()),
-        T.StructField("src_height", T.IntegerType()),
-        T.StructField("out_width", T.IntegerType()),
-        T.StructField("out_height", T.IntegerType()),
-        T.StructField("resized", T.BooleanType()),
-        T.StructField("out_bytes", T.LongType()),
-        T.StructField("resized_md5", T.StringType()),
-    ]
-)
-
-RESIZE_BOX = 64  # fit-into square box (pixels)
-
-
-def resize_media(
-    media: DataFrame,
-    decode: Callable[[bytes], tuple[int, int, int]] = decode_image,
-    box: int = RESIZE_BOX,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Aspect-preserving fit-into-box resize via ``mapInPandas`` — the
-    third media stage (decode → features → RESIZE → frame-sample).  Only
-    payloads whose longer decoded side exceeds ``box`` are resized:
-    out = floor(src * box / max(src_w, src_h)), clamped to ≥ 1 — pure
-    integer arithmetic, identical in any engine.
-
-    The pixel-resampling kernel itself is the STUB (a real cluster swaps
-    in Pillow/libvips); the stand-in emits the first out_w·out_h payload
-    bytes as the "resized" artifact, so the batching/schema/branching
-    plumbing is value-checkable end-to-end (same contract as
-    ``fake_decode``).  Embarrassingly parallel: no shuffle, one Python
-    worker per partition, whole Arrow batches across the boundary.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in RESIZE_SCHEMA.fieldNames()}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload)
-                sw, sh, _ = decode(b)
-                mx = max(sw, sh)
-                if mx > box:
-                    ow = max(1, sw * box // mx)
-                    oh = max(1, sh * box // mx)
-                else:
-                    ow, oh = sw, sh
-                out = b[: ow * oh]
-                rows["doc_id"].append(int(doc_id))
-                rows["src_width"].append(sw)
-                rows["src_height"].append(sh)
-                rows["out_width"].append(ow)
-                rows["out_height"].append(oh)
-                rows["resized"].append(mx > box)
-                rows["out_bytes"].append(len(out))
-                rows["resized_md5"].append(hashlib.md5(out).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "src_width": pd.Series(rows["src_width"], dtype="int32"),
-                    "src_height": pd.Series(rows["src_height"], dtype="int32"),
-                    "out_width": pd.Series(rows["out_width"], dtype="int32"),
-                    "out_height": pd.Series(rows["out_height"], dtype="int32"),
-                    "resized": pd.Series(rows["resized"], dtype="bool"),
-                    "out_bytes": pd.Series(rows["out_bytes"], dtype="int64"),
-                    "resized_md5": pd.Series(rows["resized_md5"], dtype="object"),
-                }
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(batches, RESIZE_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Deterministic image fixtures + real-decode stats (VERDICT r12 ask #4).
 # The gate corpus ships no image bytes, so the engine MAKES them — real

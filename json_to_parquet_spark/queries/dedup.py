@@ -2077,7 +2077,7 @@ def x214_semdedup_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, dropped, kept.  The recall trade (cross-ring pairs beyond the
     overlap band are not compared) is the documented approximation;
     SemDeDup itself only ever compares within clusters."""
-    from .similarity import dot as _dot
+    from .similarity import _sq_dist, dot as _dot
 
     corpus, placed, k1 = _x214_placement(spark, sf_dir)
     # placement feeds the per-cell rollup AND (through vecs) both sides
@@ -2186,7 +2186,7 @@ def _x214_placement(
     scale)."""
     from pyspark.sql import Window
 
-    from .similarity import dot as _dot
+    from .similarity import _sq_dist, dot as _dot
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -2206,22 +2206,12 @@ def _x214_placement(
         F.col("vec_id").alias("c_id"), F.col("v").alias("c_vec")
     )
 
-    def _sqd(a, b):
-        return F.round(
-            F.aggregate(
-                F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-
     # level 0: route the K1 fine centroids to their super-cells (K1×K0
     # scoring — bounded both sides, stays a tiny broadcast plan subtree)
     wcs = Window.partitionBy("c_id").orderBy(F.asc("sd"), F.asc("s_id"))
     cent_sup = (
         cent.crossJoin(F.broadcast(sup))
-        .select("c_id", "c_vec", "s_id", _sqd("c_vec", "s_vec").alias("sd"))
+        .select("c_id", "c_vec", "s_id", _sq_dist("c_vec", "s_vec").alias("sd"))
         .withColumn("spick", F.row_number().over(wcs))
         .filter(F.col("spick") == 1)
         .select("s_id", "c_id", "c_vec")
@@ -2231,7 +2221,7 @@ def _x214_placement(
     wvs = Window.partitionBy("vec_id").orderBy(F.asc("sd"), F.asc("s_id"))
     vec_sup = (
         withn.crossJoin(F.broadcast(sup))
-        .select("vec_id", "v", "nrm", "s_id", _sqd("v", "s_vec").alias("sd"))
+        .select("vec_id", "v", "nrm", "s_id", _sq_dist("v", "s_vec").alias("sd"))
         .withColumn("spick", F.row_number().over(wvs))
         .filter(F.col("spick") == 1)
         .select("vec_id", "v", "nrm", "s_id")
@@ -2243,7 +2233,7 @@ def _x214_placement(
         "vec_id",
         "nrm",
         "c_id",
-        _sqd("v", "c_vec").alias("d"),
+        _sq_dist("v", "c_vec").alias("d"),
     )
     wv = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("c_id"))
     assign = (

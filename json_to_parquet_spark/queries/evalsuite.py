@@ -316,6 +316,7 @@ from .similarity import (  # noqa: E402
     IVF_N_PROBE,
     SQL_IVF_NLIST,
     SQL_TWO_LEVEL_LISTS,
+    _l2_dist,
     ivf_nlist,
 )  # noqa: E402
 
@@ -692,21 +693,7 @@ def x80_ivf_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < ivf_nlist(spark, sf_dir)).select(
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
     )
-    dist = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    F.col("c_vec"),
-                    lambda x, y: (x.cast("double") - y.cast("double"))
-                    * (x.cast("double") - y.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ),
-        6,
-    )
+    dist = _l2_dist(F.col("embedding"), F.col("c_vec"))
     scored = emb.crossJoin(F.broadcast(cent)).select(
         "vec_id", "c_id", dist.alias("dist")
     )

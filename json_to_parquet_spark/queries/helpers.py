@@ -119,7 +119,10 @@ def _inline_lit(v, sql_type: str) -> str:
         return f"'{s}'"
     if sql_type == "BOOLEAN":
         return "true" if v else "false"
-    return f"{int(v)}{'L' if sql_type == 'BIGINT' else ''}"
+    i = int(v)
+    if i != v:
+        raise ValueError(f"inline_rows: non-integral {v!r} for a {sql_type} column")
+    return f"{i}{'L' if sql_type == 'BIGINT' else ''}"
 
 
 def inline_rows(spark, rows, schema: str):
@@ -141,13 +144,25 @@ def inline_rows(spark, rows, schema: str):
     scalar types only (int/long/double/string/boolean), which is every
     spine and driver-side rollup the registry builds.  Falls back to
     ``createDataFrame`` for empty input (VALUES needs at least one
-    row)."""
+    row).  Raises ValueError on a row whose length differs from the
+    schema's field count, and on a non-integral value for an int/long
+    column, where ``createDataFrame`` would also refuse.
+
+    String literals are backslash-escaped, which assumes the default
+    ``spark.sql.parser.escapedStringLiterals=false``; the conf is not
+    read here, since that costs a py4j round trip per call."""
     fields = []
     for part in schema.split(","):
         name, typ = part.split()
         fields.append((name, _INLINE_SQL_TYPES[typ.lower()]))
     if not rows:
         return spark.createDataFrame([], schema)
+    for r in rows:
+        if len(r) != len(fields):
+            raise ValueError(
+                f"inline_rows: row {r!r} has {len(r)} values for "
+                f"{len(fields)} fields"
+            )
     vals = ",".join(
         "("
         + ",".join(_inline_lit(v, t) for v, (_n, t) in zip(r, fields))

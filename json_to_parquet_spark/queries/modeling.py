@@ -173,9 +173,6 @@ def x205_capacity_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < CAP_K).select(
         F.col("vec_id").alias("c_id"), F.col("v").alias("c_vec")
     )
-    # shared HOF kernel (r14 dedup) — bit-identical to the previous
-    # inline zip_with fold; the unrolled dim= opt-in is deliberately
-    # NOT taken here (computed-array inputs regress it, see similarity)
     from .similarity import _sq_dist
 
     scored = emb.crossJoin(F.broadcast(cent)).select(

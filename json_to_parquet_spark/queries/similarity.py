@@ -21,32 +21,13 @@ from . import QuerySpec, register
 N_QUERY_VECS = 5  # vec_id < 5 are the query vectors
 TOP_K = 10
 
-# The engine's embedding dimensionality.  Already a de-facto contract
-# (``sign_lsh_bucket`` hashes ``F.sequence(0, 63)``); named here so the
-# hot vector kernels can unroll to whole-stage-codegen'd arithmetic.
-# Spark's higher-order functions (zip_with/aggregate) are
-# CodegenFallback — every row drops to interpreted expression eval — so
-# the kernels below emit, for VEC_DIM-length inputs, an unrolled
-# element_at chain instead (optimization guide §4.2: keep per-row work
-# compiled).  The addition order is the identical left-associated fold
-# seeded at 0.0, so results are bit-identical; inputs of any OTHER
-# length take the original HOF path via a per-row size guard, so
-# non-embedding arrays (PQ subvectors, d² PCA rows) are untouched.
-VEC_DIM = 64
-
-
-def _fold_terms(terms) -> Column:
-    # left-assoc sum STARTING AT 0.0 — the identical IEEE op sequence as
-    # F.aggregate(..., F.lit(0.0), acc + v) (including the 0.0 + (-0.0)
-    # sign edge), so the unrolled kernels are bit-identical to the HOF
-    # fold they replace.
-    e = F.lit(0.0)
-    for t in terms:
-        e = e + t
-    return e
-
-
-def _dot_hof(a: Column, b: Column) -> Column:
+def dot(a: Column, b: Column) -> Column:
+    """Σ a_i·b_i in index order, JVM-side: one zip_with+aggregate fold
+    seeded at 0.0, for any array length and for computed array inputs.
+    There is no unrolled element_at path: every run re-plans, and its
+    codegen compile cost outweighed the per-row win both times it was
+    tried (r14 x176: no gain, and 3-4x slower on x237's computed arrays;
+    r15 x291: 2.75-2.92 s against 1.29 s)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -54,44 +35,54 @@ def _dot_hof(a: Column, b: Column) -> Column:
     )
 
 
-def _dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    return _fold_terms(
-        F.get(a, i).cast("double") * F.get(b, i).cast("double")
-        for i in range(dim)
+def l2norm(a: Column) -> Column:
+    return F.sqrt(dot(a, a))
+
+
+def cosine(a: Column, b: Column) -> Column:
+    return F.round(dot(a, b) / (l2norm(a) * l2norm(b)), 6)
+
+
+def _sq_sum(a: Column, b: Column) -> Column:
+    """Unrounded Σ (a_i − b_i)² — a sequential fold, so the addition order
+    is fixed and identical in both engines."""
+    return F.aggregate(
+        F.zip_with(
+            a,
+            b,
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Σ a_i·b_i in index order, JVM-side.
-
-    dim=None (default): the zip_with+aggregate fold — correct for any
-    array length and for COMPUTED array expressions (each input is
-    referenced exactly once).  dim=VEC_DIM (opt-in): a size-guarded
-    unrolled element_at chain — same multiplies, same left-assoc
-    addition order seeded at 0.0, so bit-identical results — that
-    whole-stage-codegens instead of falling back to interpreted HOF
-    eval.  Measured on 200k dim-64 pairs of PLAIN COLUMN inputs:
-    guarded-unrolled 0.55 s vs HOF 1.7 s (the When guard is
-    load-bearing for speed too — a bare 64-term chain compiles into one
-    huge method the JIT refuses: 3.6 s).  Opt in ONLY where both inputs
-    are materialized array columns: the 64 element references re-
-    evaluate a computed-array input (e.g. a transform(...) expression)
-    per element, measured 3-4× SLOWER end-to-end on x237 — the
-    helpers.py rule-10 lesson at the kernel level."""
-    if dim is None:
-        return _dot_hof(a, b)
-    return F.when(
-        (F.size(a) == dim) & (F.size(b) == dim),
-        _dot_unrolled(a, b, dim),
-    ).otherwise(_dot_hof(a, b))
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Rounded squared L2 (ROUND is helpers rule 3)."""
+    return F.round(_sq_sum(a, b), 6)
 
 
-def l2norm(a: Column, dim: int | None = None) -> Column:
-    return F.sqrt(dot(a, a, dim))
+def _l2_dist(a: Column, b: Column) -> Column:
+    """Rounded L2 distance (ROUND is helpers rule 3)."""
+    return F.round(F.sqrt(_sq_sum(a, b)), 6)
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return F.round(dot(a, b, dim) / (l2norm(a, dim) * l2norm(b, dim)), 6)
+def _nearest_centroid(frame: DataFrame, cent: DataFrame, label: str) -> DataFrame:
+    """(vec_id, v, <label>, d): each ``frame(vec_id, v)`` row's nearest
+    ``cent(c_id, c_vec)`` by rounded squared L2, ties to the lower c_id —
+    broadcast cross join + row_number window.  The window stays: a
+    no-join transform+array_min argmin was bit-identical but 1.2x slower
+    at K=8 and 2x at K=64."""
+    scored = frame.crossJoin(F.broadcast(cent)).select(
+        "vec_id", "v", "c_id", _sq_dist(F.col("v"), F.col("c_vec")).alias("d")
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("c_id"))
+    return (
+        scored.withColumn("r", F.row_number().over(w))
+        .filter(F.col("r") == 1)
+        .select("vec_id", "v", F.col("c_id").alias(label), "d")
+    )
 
 
 def x11_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,21 +656,7 @@ def x21_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored = df.crossJoin(F.broadcast(cent)).select(
             id_col,
             "c_id",
-            F.round(
-                F.sqrt(
-                    F.aggregate(
-                        F.zip_with(
-                            vec_col,
-                            F.col("c_vec"),
-                            lambda x, y: (x.cast("double") - y.cast("double"))
-                            * (x.cast("double") - y.cast("double")),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
-                ),
-                6,
-            ).alias("dist"),
+            _l2_dist(vec_col, F.col("c_vec")).alias("dist"),
         )
         w = Window.partitionBy(id_col).orderBy(F.asc("dist"), F.asc("c_id"))
         return (
@@ -788,21 +765,7 @@ def x42_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = sub.filter(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").alias("c_id"), "m", F.col("subvec").alias("c_vec")
     )
-    dist = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    F.col("subvec"),
-                    F.col("c_vec"),
-                    lambda x, y: (x.cast("double") - y.cast("double"))
-                    * (x.cast("double") - y.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ),
-        6,
-    )
+    dist = _l2_dist(F.col("subvec"), F.col("c_vec"))
     scored = sub.join(F.broadcast(cent), "m").select(
         "vec_id", F.col("m").cast("long").alias("m"), "c_id", dist.alias("dist")
     )
@@ -844,40 +807,6 @@ KM_K = 8  # clusters
 KM_ITERS = 3
 
 
-def _sq_dist(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Rounded squared L2 between two double arrays — sequential fold, so
-    the addition order is fixed and identical in both engines (the x21
-    pattern; ROUND is helpers rule 3).  Same adaptive unroll contract as
-    ``dot`` (see VEC_DIM): bit-identical ops, compiled instead of
-    interpreted for embedding-shaped rows."""
-
-    def _term(i: int) -> Column:
-        d = F.get(a, i).cast("double") - F.get(b, i).cast("double")
-        return d * d
-
-    def _unrolled(n: int) -> Column:
-        return F.round(_fold_terms(_term(i) for i in range(n)), 6)
-
-    hof = F.round(
-        F.aggregate(
-            F.zip_with(
-                a,
-                b,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
-    if dim is None:
-        return hof
-    return F.when(
-        (F.size(a) == dim) & (F.size(b) == dim), _unrolled(dim)
-    ).otherwise(hof)
-
-
 def x49_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parallel Lloyd k-means over the embedding corpus — the clustering
     pass behind semantic dedup and IVF index builds. Deterministic
@@ -906,15 +835,7 @@ def kmeans_assign(emb: DataFrame) -> DataFrame:
     )
     assign = None
     for _ in range(KM_ITERS):
-        scored = emb.crossJoin(F.broadcast(cent)).select(
-            "vec_id", "v", "c_id", _sq_dist(F.col("v"), F.col("c_vec")).alias("d")
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("c_id"))
-        assign = (
-            scored.withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") == 1)
-            .select("vec_id", "v", F.col("c_id").alias("cluster"), "d")
-        )
+        assign = _nearest_centroid(emb, cent, "cluster")
         dims = assign.select(
             "cluster", F.posexplode("v").alias("dim", "val")
         )
@@ -1044,21 +965,7 @@ def x121_ivf_partitioned_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_id",
         "q_vec",
         "c_id",
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("q_vec"),
-                        F.col("c_vec"),
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ),
-            6,
-        ).alias("dist"),
+        _l2_dist(F.col("q_vec"), F.col("c_vec")).alias("dist"),
     )
     wq = Window.partitionBy("q_id").orderBy(F.asc("dist"), F.asc("c_id"))
     probes = (
@@ -1460,21 +1367,7 @@ def x215_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored = df.crossJoin(F.broadcast(cent)).select(
             "vec_id",
             "c_id",
-            F.round(
-                F.sqrt(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("embedding"),
-                            F.col("c_vec"),
-                            lambda x, y: (x.cast("double") - y.cast("double"))
-                            * (x.cast("double") - y.cast("double")),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
-                ),
-                6,
-            ).alias("dist"),
+            _l2_dist(F.col("embedding"), F.col("c_vec")).alias("dist"),
         )
         w = Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("c_id"))
         return (
@@ -1903,21 +1796,7 @@ def x218_filtered_ann_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdist = queries.crossJoin(F.broadcast(cent)).select(
         "q_id",
         "c_id",
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("q_vec"),
-                        F.col("c_vec"),
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ),
-            6,
-        ).alias("dist"),
+        _l2_dist(F.col("q_vec"), F.col("c_vec")).alias("dist"),
     )
     wq = Window.partitionBy("q_id").orderBy(F.asc("dist"), F.asc("c_id"))
     probes = (
@@ -2136,21 +2015,7 @@ def x219_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdist = queries.crossJoin(F.broadcast(cent)).select(
         "q_id",
         "c_id",
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("q_vec"),
-                        F.col("c_vec"),
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ),
-            6,
-        ).alias("dist"),
+        _l2_dist(F.col("q_vec"), F.col("c_vec")).alias("dist"),
     )
     wq = Window.partitionBy("q_id").orderBy(F.asc("dist"), F.asc("c_id"))
     probes = (
@@ -2911,15 +2776,7 @@ def lloyd_refine(samp: DataFrame, cent: DataFrame, rounds: int) -> DataFrame:
     broadcast(nlist) scoring (~32·n flops total — linear) + an
     (n_samp·d)-row map-side-combined mean."""
     for _ in range(rounds):
-        scored = samp.crossJoin(F.broadcast(cent)).select(
-            "vec_id", "v", "c_id", _sq_dist(F.col("v"), F.col("c_vec")).alias("d")
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("c_id"))
-        assign = (
-            scored.withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") == 1)
-            .select("vec_id", "v", F.col("c_id").alias("cluster"))
-        )
+        assign = _nearest_centroid(samp, cent, "cluster")
         dims = assign.select("cluster", F.posexplode("v").alias("dim", "val"))
         means = dims.groupBy("cluster", "dim").agg(
             (
@@ -4824,15 +4681,7 @@ def _locd_assign(corpus: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, v, cell): nearest-of-LOCD_NLIST flat assignment (the
     cell count is fixed by the fixture's geometry, not grown with n —
     the production √n routing is x260's, not re-proven here)."""
-    scored = corpus.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "v", "c_id", _sq_dist(F.col("v"), F.col("c_vec")).alias("d")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("c_id"))
-    return (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select("vec_id", "v", F.col("c_id").alias("cell"))
-    )
+    return _nearest_centroid(corpus, cents, "cell").drop("d")
 
 
 def _locd_frames(spark: SparkSession, sf_dir: str):
@@ -5258,21 +5107,7 @@ def x291_ivf_persisted_search(
     qdist = queries.crossJoin(F.broadcast(cent)).select(
         "q_id",
         "c_id",
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("q_vec"),
-                        F.col("c_vec"),
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ),
-            6,
-        ).alias("dist"),
+        _l2_dist(F.col("q_vec"), F.col("c_vec")).alias("dist"),
     )
     w = Window.partitionBy("q_id").orderBy(F.asc("dist"), F.asc("c_id"))
     probes = (
@@ -5288,13 +5123,8 @@ def x291_ivf_persisted_search(
     scored = cand.select(
         "q_id",
         "vec_id",
-        # dim=VEC_DIM unrolled-kernel opt-in TRIED here in r15 (plain
-        # store columns — the one shape r14's probes said wins) and
-        # REVERTED: paired probe 1.29 s (HOF) vs 2.75-2.92 s (unrolled)
-        # — under bench conditions every run re-plans, and the unrolled
-        # chain's codegen compile cost dwarfs the per-row win at this
-        # candidate volume.  Steady-state serving with a REUSED plan is
-        # still the opt-in's documented home; do not re-try per-run.
+        # an unrolled cosine kernel measured 2.75-2.92 s vs 1.29 s here
+        # (r15 paired probe; its codegen compile cost outweighs the win)
         cosine(F.col("q_vec"), F.col("embedding")).alias("cos_sim"),
     )
     w2 = Window.partitionBy("q_id").orderBy(

@@ -1,8 +1,8 @@
-"""Round-14 iteration loop: bench a SUBSET of entries with bench.py's
-exact methodology (same session conf, same noop sink, same warm-up +
-min-of-N + convergence guard) so before/after deltas are comparable.
+"""Bench a SUBSET of entries with bench.py's exact methodology (same
+session conf, same noop sink, same warm-up + min-of-N + convergence
+guard) so before/after deltas are comparable.
 
-Usage: python scripts/bench_subset_r14.py x261_drift_reindex_io x247_...
+Usage: python scripts/bench_subset.py x261_drift_reindex_io x247_...
 Prints one JSON line {name: min_sec, ...} plus raws to stderr.
 """
 
@@ -21,7 +21,7 @@ from json_to_parquet_spark.session import build_session  # noqa: E402
 
 def main() -> None:
     names = sys.argv[1:]
-    spark = build_session(app_name="bench_subset_r14")
+    spark = build_session(app_name="bench_subset")
     reg = registry()
     out = {}
     for name in names:

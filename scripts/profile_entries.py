@@ -1,16 +1,16 @@
-"""Round-14 profiling harness (guide §1): run selected bench entries with
+"""Profiling harness: run selected bench entries with
 the Spark event log enabled and per-entry job descriptions, then
 aggregate jobs/stages/tasks/shuffle bytes per entry from the event log.
 
 Usage:
-    python scripts/profile_r14.py x172_stream_neardup x261_drift_reindex_io ...
-    python scripts/profile_r14.py --top N      # N heaviest from BENCH_RAWS medians
+    python scripts/profile_entries.py x172_stream_neardup x261_drift_reindex_io ...
+    python scripts/profile_entries.py --top N      # N heaviest from BENCH_RAWS medians
 
 Prints, per entry: wall seconds (1 warm + 1 timed, same noop-sink action
 as bench.py), number of Spark jobs, number of stages, total task time,
 shuffle read/write bytes, and peak single-stage task time — enough to
 tell scheduler overhead from compute from shuffle (guide §1.1/§7).
-Writes the raw per-job table to /tmp/profile_r14/<entry>.json.
+Writes the raw per-job table to /tmp/profile_entries/<entry>.json.
 """
 
 from __future__ import annotations
@@ -23,8 +23,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-EVLOG = "/tmp/spark-events-r14"
-OUT_DIR = "/tmp/profile_r14"
+EVLOG = "/tmp/profile_entries/events"
+OUT_DIR = "/tmp/profile_entries"
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -38,7 +38,7 @@ def main() -> None:
     os.makedirs(OUT_DIR, exist_ok=True)
 
     spark = build_session(
-        app_name="profile_r14",
+        app_name="profile_entries",
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": f"file://{EVLOG}",
@@ -90,58 +90,57 @@ def main() -> None:
         )
     jobs: dict[int, dict] = {}
     stage_job: dict[int, int] = {}
+
     def _lines():
         for lg in logs:
             with open(lg) as f:
                 yield from f
 
-    if True:  # keep the original loop body's indentation
-        for line in _lines():
-            ev = json.loads(line)
-            k = ev.get("Event")
-            if k == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                desc = ev["Properties"].get("spark.job.description", "")
-                jobs[jid] = {
-                    "desc": desc,
-                    "t0": ev["Submission Time"],
-                    "stages": 0,
-                    "tasks": 0,
-                    "task_ms": 0,
-                    "sh_read": 0,
-                    "sh_write": 0,
-                    "max_stage_ms": 0,
-                }
-                for sid in ev["Stage IDs"]:
-                    stage_job[sid] = jid
-            elif k == "SparkListenerJobEnd":
-                jid = ev["Job ID"]
-                if jid in jobs:
-                    jobs[jid]["wall_ms"] = ev["Completion Time"] - jobs[jid]["t0"]
-            elif k == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                jid = stage_job.get(si["Stage ID"])
-                if jid is None or jid not in jobs:
-                    continue
-                j = jobs[jid]
-                j["stages"] += 1
-                j["tasks"] += si["Number of Tasks"]
-                ms = si.get("Completion Time", 0) - si.get("Submission Time", 0)
-                j["max_stage_ms"] = max(j["max_stage_ms"], ms)
-            elif k == "SparkListenerTaskEnd":
-                si = ev["Stage Info"] if "Stage Info" in ev else None
-                jid = stage_job.get(ev["Stage ID"])
-                if jid is None or jid not in jobs:
-                    continue
-                m = ev.get("Task Metrics") or {}
-                j = jobs[jid]
-                j["task_ms"] += m.get("Executor Run Time", 0)
-                j["sh_read"] += (m.get("Shuffle Read Metrics") or {}).get(
-                    "Remote Bytes Read", 0
-                ) + (m.get("Shuffle Read Metrics") or {}).get("Local Bytes Read", 0)
-                j["sh_write"] += (m.get("Shuffle Write Metrics") or {}).get(
-                    "Shuffle Bytes Written", 0
-                )
+    for line in _lines():
+        ev = json.loads(line)
+        k = ev.get("Event")
+        if k == "SparkListenerJobStart":
+            jid = ev["Job ID"]
+            desc = ev["Properties"].get("spark.job.description", "")
+            jobs[jid] = {
+                "desc": desc,
+                "t0": ev["Submission Time"],
+                "stages": 0,
+                "tasks": 0,
+                "task_ms": 0,
+                "sh_read": 0,
+                "sh_write": 0,
+                "max_stage_ms": 0,
+            }
+            for sid in ev["Stage IDs"]:
+                stage_job[sid] = jid
+        elif k == "SparkListenerJobEnd":
+            jid = ev["Job ID"]
+            if jid in jobs:
+                jobs[jid]["wall_ms"] = ev["Completion Time"] - jobs[jid]["t0"]
+        elif k == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            jid = stage_job.get(si["Stage ID"])
+            if jid is None or jid not in jobs:
+                continue
+            j = jobs[jid]
+            j["stages"] += 1
+            j["tasks"] += si["Number of Tasks"]
+            ms = si.get("Completion Time", 0) - si.get("Submission Time", 0)
+            j["max_stage_ms"] = max(j["max_stage_ms"], ms)
+        elif k == "SparkListenerTaskEnd":
+            jid = stage_job.get(ev["Stage ID"])
+            if jid is None or jid not in jobs:
+                continue
+            m = ev.get("Task Metrics") or {}
+            j = jobs[jid]
+            j["task_ms"] += m.get("Executor Run Time", 0)
+            j["sh_read"] += (m.get("Shuffle Read Metrics") or {}).get(
+                "Remote Bytes Read", 0
+            ) + (m.get("Shuffle Read Metrics") or {}).get("Local Bytes Read", 0)
+            j["sh_write"] += (m.get("Shuffle Write Metrics") or {}).get(
+                "Shuffle Bytes Written", 0
+            )
 
     # roll up per entry (timed: only)
     per: dict[str, dict] = {}

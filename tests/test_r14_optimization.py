@@ -1,14 +1,7 @@
 """Round-14 (optimization round) focused guards.
 
-1. The vector kernels' opt-in unrolled path (``dim=VEC_DIM``) must be
-   BIT-identical to the default zip_with+aggregate fold — same IEEE op
-   sequence, including the 0.0 seed — for embedding-shaped inputs, and
-   must fall back to the fold for any other length (the per-row size
-   guard).  The unrolled path is currently unused by queries (measured
-   a wash under per-run re-planning at bench scale and a regression on
-   computed-array inputs — see OPTIMIZATION_r14.md) but is kept as the
-   documented steady-state/serving option; this test pins its
-   correctness so a future opt-in cannot drift.
+1. The vector kernels (``dot``, ``_sq_dist``, ``_l2_dist``) return the
+   exact values of the zip_with+aggregate fold on a small row.
 
 2. x261's r14 pass-sharing restructure must keep the adoption decision
    identical to x237's (the ledger's `adopted` column is x237's
@@ -21,57 +14,19 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def _emb_pairs(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = emb.limit(7).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("q_vec")
-    )
-    return emb.crossJoin(F.broadcast(q))
+def test_kernel_values(spark):
+    from json_to_parquet_spark.queries.similarity import _l2_dist, _sq_dist, dot
 
-
-def test_kernel_unrolled_bit_identical(spark, sf_dir):
-    from json_to_parquet_spark.queries.similarity import (
-        VEC_DIM,
-        _sq_dist,
-        cosine,
-        dot,
-    )
-
-    pairs = _emb_pairs(spark, sf_dir)
-    df = pairs.select(
-        "vec_id",
-        "q_id",
-        dot(F.col("v"), F.col("q_vec")).alias("d_hof"),
-        dot(F.col("v"), F.col("q_vec"), VEC_DIM).alias("d_unr"),
-        cosine(F.col("v"), F.col("q_vec")).alias("c_hof"),
-        cosine(F.col("v"), F.col("q_vec"), VEC_DIM).alias("c_unr"),
-        _sq_dist(F.col("v"), F.col("q_vec")).alias("s_hof"),
-        _sq_dist(F.col("v"), F.col("q_vec"), VEC_DIM).alias("s_unr"),
-    )
-    bad = df.filter(
-        (F.col("d_hof") != F.col("d_unr"))
-        | (F.col("c_hof") != F.col("c_unr"))
-        | (F.col("s_hof") != F.col("s_unr"))
-    ).count()
-    assert bad == 0
-
-
-def test_kernel_guard_falls_back_on_other_lengths(spark, sf_dir):
-    from json_to_parquet_spark.queries.similarity import VEC_DIM, dot
-
-    # 3-element arrays: the dim=VEC_DIM guard must route to the HOF fold
-    # (NOT null-poison through out-of-range element_at)
-    df = spark.createDataFrame(
+    row = spark.createDataFrame(
         [(1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0])], "id long, a array<double>, b array<double>"
     ).select(
-        dot(F.col("a"), F.col("b")).alias("d_hof"),
-        dot(F.col("a"), F.col("b"), VEC_DIM).alias("d_guarded"),
-    )
-    row = df.collect()[0]
-    assert row.d_hof == 32.0
-    assert row.d_guarded == 32.0
+        dot(F.col("a"), F.col("b")).alias("dot"),
+        _sq_dist(F.col("a"), F.col("b")).alias("sq"),
+        _l2_dist(F.col("a"), F.col("b")).alias("l2"),
+    ).collect()[0]
+    assert row.dot == 32.0
+    assert row.sq == 27.0
+    assert row.l2 == 5.196152
 
 
 def test_x261_adoption_matches_x237(spark, sf_dir):

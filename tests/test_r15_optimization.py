@@ -132,3 +132,18 @@ def test_inline_rows_bit_identical_to_createDataFrame(spark):
     assert dense.schema == spark.createDataFrame(
         [(1, 2, 3.0, "x", True)], schema
     ).schema
+
+
+def test_inline_rows_rejects_malformed_rows(spark):
+    """inline_rows must fail loudly where zip and int() would silently
+    truncate: a short or long row, or a non-integral int/long value."""
+    import pytest
+
+    from json_to_parquet_spark.queries.helpers import inline_rows
+
+    schema = "a int, b long, c double"
+    for bad in ([(1, 2)], [(1, 2, 3.0, 4)], [(2.5, 2, 3.0)], [(1, 7.25, 3.0)]):
+        with pytest.raises(ValueError):
+            inline_rows(spark, bad, schema)
+    # integral values of a numeric type are still accepted
+    assert inline_rows(spark, [(1, 2.0, 3)], schema).collect()[0].b == 2
