@@ -11,14 +11,22 @@ Error handling: the reference diverges (PyArrow strict / pandas coerce-to-
 null; SURVEY §1.3.3). Default is strict (raise on a non-null unparseable
 string), with ``mode="coerce"`` for null-on-failure.
 
-Spark-first design: this is NOT a row-level transformation. It is a pure
-compile step ``StructType -> list[Column]`` executed once on the driver.
-The emitted expression tree uses only JVM-side primitives —
-``to_timestamp`` / ``try_to_timestamp``, ``Column.withField`` (preserves
-struct nullness, unlike rebuilding with ``F.struct``), and the higher-order
-``F.transform`` for arrays — so the whole rewrite stays inside whole-stage
-codegen and Catalyst is free to prune/reorder around it. No UDFs, no
-Python in the hot path, no driver-side data movement.
+Spark-first design: this is NOT a row-level transformation. It is a
+compile step ``StructType -> list[Column]`` executed once on the driver,
+in two parts. First a plain walk over the Python ``StructType`` finds the
+``_dt`` sites and prunes the type down to the paths that lead to them;
+it builds no Column and makes no py4j call, so ``dt_rewrite_paths`` and
+``dt_site_columns`` cost nothing on the JVM side, and a frame with no
+site is returned untouched. Then Columns are built once, only along the
+pruned paths: every Column call is a py4j round trip, so fields without a
+site are never visited (a strict compile of the findings fixture schema
+makes ~900 calls). The emitted expression tree uses only JVM-side
+primitives — ``to_timestamp`` / ``try_to_timestamp``, ``Column.withField``
+(preserves struct nullness, unlike rebuilding with ``F.struct``), and the
+higher-order ``F.transform`` for arrays and map values — so the whole
+rewrite stays inside whole-stage codegen and Catalyst is free to
+prune/reorder around it. No UDFs, no Python in the hot path, no
+driver-side data movement.
 """
 
 from __future__ import annotations
@@ -56,37 +64,25 @@ def _cast_string_to_ts(col: Column, name: str, mode: str) -> Column:
     ).otherwise(parsed)
 
 
-def _rewrite_expr(
-    col: Column, dtype: T.DataType, name: str, mode: str, path: str, paths: list[str]
-) -> Column | None:
-    """Return a rewritten Column for ``col`` or None if nothing to change.
+def _site_type(dtype: T.DataType, name: str) -> T.DataType | None:
+    """``dtype`` pruned to the subtrees that hold a ``_dt`` site, or None.
 
-    Returning None (instead of an identity expression) keeps untouched
-    columns out of the Project node entirely, so Catalyst sees them as
-    pass-through and column pruning/pushdown are unaffected.
+    A plain walk over the Python type objects: it builds no Column and
+    makes no py4j call. The pruned type keeps only what the Column
+    compile needs — the site strings, the structs on the way to them and
+    the arrays/maps that contain them — so the compile touches nothing
+    else.
     """
-    if isinstance(dtype, T.StringType) and _is_dt_name(name):
-        paths.append(path)
-        return _cast_string_to_ts(col, name, mode)
+    if isinstance(dtype, T.StringType):
+        return dtype if _is_dt_name(name) else None
 
     if isinstance(dtype, T.StructType):
-        result = col
-        changed = False
+        fields = []
         for field in dtype.fields:
-            child = _rewrite_expr(
-                col.getField(field.name),
-                field.dataType,
-                field.name,
-                mode,
-                f"{path}.{field.name}",
-                paths,
-            )
-            if child is not None:
-                # withField preserves the nullness of the struct itself
-                # (null struct stays null) and all sibling fields.
-                result = result.withField(field.name, child)
-                changed = True
-        return result if changed else None
+            site = _site_type(field.dataType, field.name)
+            if site is not None:
+                fields.append(T.StructField(field.name, site))
+        return T.StructType(fields) if fields else None
 
     if isinstance(dtype, T.ArrayType):
         # Elements carry no field name of their own: the reference's list
@@ -95,70 +91,79 @@ def _rewrite_expr(
         # named '*_dt' must NOT have its string elements cast. Recursing
         # with an empty name reproduces exactly that: only named struct
         # fields inside the element can match the _dt rule.
-        probe: list[str] = []
-        sample = _rewrite_expr(
-            F.lit(None).cast(dtype.elementType),
-            dtype.elementType,
-            "",
-            mode,
-            f"{path}[]",
-            probe,
-        )
-        if sample is None:
-            return None
-        paths.extend(probe)
-        return F.transform(
-            col,
-            lambda x: _rewrite_expr(x, dtype.elementType, "", mode, f"{path}[]", []),
-        )
+        element = _site_type(dtype.elementType, "")
+        return None if element is None else T.ArrayType(element)
 
     if isinstance(dtype, T.MapType):
         # Map values may contain structs with _dt fields. Same rule as
         # arrays: the value slot is anonymous, so a map field named
         # '*_dt' does not cast plain string values.
-        probe_v: list[str] = []
-        sample_v = _rewrite_expr(
-            F.lit(None).cast(dtype.valueType),
-            dtype.valueType,
-            "",
-            mode,
-            f"{path}{{}}",
-            probe_v,
-        )
-        if sample_v is None:
-            return None
-        paths.extend(probe_v)
-        return F.map_from_arrays(
-            F.map_keys(col),
-            F.transform(
-                F.map_values(col),
-                lambda v: _rewrite_expr(v, dtype.valueType, "", mode, f"{path}{{}}", []),
-            ),
-        )
+        value = _site_type(dtype.valueType, "")
+        return None if value is None else T.MapType(dtype.keyType, value)
 
     return None
 
 
-def _rewrite_type(dtype: T.DataType, name: str = "") -> T.DataType:
-    """The post-rewrite Spark type for ``dtype`` (for schema assertions)."""
-    if isinstance(dtype, T.StringType) and _is_dt_name(name):
-        return T.TimestampType()
-    if isinstance(dtype, T.StructType):
-        return T.StructType(
-            [
-                T.StructField(f.name, _rewrite_type(f.dataType, f.name), f.nullable)
-                for f in dtype.fields
-            ]
+def _site_paths(site: T.DataType, path: str) -> list[str]:
+    """The dotted paths of the string sites in a pruned ``site`` type."""
+    if isinstance(site, T.StructType):
+        return [p for f in site.fields for p in _site_paths(f.dataType, f"{path}.{f.name}")]
+    if isinstance(site, T.ArrayType):
+        return _site_paths(site.elementType, f"{path}[]")
+    if isinstance(site, T.MapType):
+        return _site_paths(site.valueType, f"{path}{{}}")
+    return [path]
+
+
+def _rewrite_expr(col: Column, site: T.DataType, name: str, mode: str) -> Column:
+    """The rewritten Column for ``col``, built along the pruned ``site`` type."""
+    if isinstance(site, T.StructType):
+        result = col
+        for field in site.fields:
+            # withField preserves the nullness of the struct itself
+            # (null struct stays null) and all sibling fields.
+            result = result.withField(
+                field.name,
+                _rewrite_expr(col.getField(field.name), field.dataType, field.name, mode),
+            )
+        return result
+
+    if isinstance(site, T.ArrayType):
+        return F.transform(col, lambda x: _rewrite_expr(x, site.elementType, "", mode))
+
+    if isinstance(site, T.MapType):
+        return F.map_from_arrays(
+            F.map_keys(col),
+            F.transform(
+                F.map_values(col),
+                lambda v: _rewrite_expr(v, site.valueType, "", mode),
+            ),
         )
-    if isinstance(dtype, T.ArrayType):
-        return T.ArrayType(_rewrite_type(dtype.elementType, ""), dtype.containsNull)
-    if isinstance(dtype, T.MapType):
-        return T.MapType(
-            dtype.keyType,
-            _rewrite_type(dtype.valueType, ""),
-            dtype.valueContainsNull,
-        )
-    return dtype
+
+    return _cast_string_to_ts(col, name, mode)
+
+
+def _check_mode(mode: str) -> None:
+    if mode not in ("strict", "coerce"):
+        raise ValueError(f"mode must be 'strict' or 'coerce', got {mode!r}")
+
+
+def _sites(schema: T.StructType) -> list[tuple[str, T.DataType | None]]:
+    """(name, pruned site type or None) for each top-level field, in order."""
+    return [(f.name, _site_type(f.dataType, f.name)) for f in schema.fields]
+
+
+def _paths(sites: list[tuple[str, T.DataType | None]]) -> list[str]:
+    return [p for name, site in sites if site is not None for p in _site_paths(site, name)]
+
+
+def _columns(sites: list[tuple[str, T.DataType | None]], mode: str) -> list[Column]:
+    return [
+        F.col(name)
+        if site is None
+        else _rewrite_expr(F.col(name), site, name, mode).alias(name)
+        for name, site in sites
+    ]
 
 
 def dt_rewrite_columns(
@@ -170,31 +175,27 @@ def dt_rewrite_columns(
     Returns (columns, rewritten_paths). Columns appear in original schema
     order; untouched columns are plain ``F.col`` references.
     """
-    if mode not in ("strict", "coerce"):
-        raise ValueError(f"mode must be 'strict' or 'coerce', got {mode!r}")
-    cols: list[Column] = []
-    paths: list[str] = []
-    for field in schema.fields:
-        expr = _rewrite_expr(
-            F.col(field.name), field.dataType, field.name, mode, field.name, paths
-        )
-        if expr is None:
-            cols.append(F.col(field.name))
-        else:
-            cols.append(expr.alias(field.name))
-    return cols, paths
+    _check_mode(mode)
+    sites = _sites(schema)
+    return _columns(sites, mode), _paths(sites)
 
 
 def dt_rewrite_paths(schema: T.StructType) -> list[str]:
     """Just the dotted paths that would be rewritten (for logging/lineage —
-    the reference logs before/after schemas; SURVEY §2 U2)."""
-    _, paths = dt_rewrite_columns(schema, mode="coerce")
-    return paths
+    the reference logs before/after schemas; SURVEY §2 U2). No py4j call."""
+    return _paths(_sites(schema))
+
+
+def dt_site_columns(schema: T.StructType) -> list[str]:
+    """The top-level columns that hold at least one ``_dt`` site — the
+    columns whose values the rewrite changes. No py4j call."""
+    return [name for name, site in _sites(schema) if site is not None]
 
 
 def rewrite_dt_fields(df: DataFrame, mode: str = "strict") -> DataFrame:
     """Apply the ``_dt`` rewrite to a DataFrame (no-op if no ``_dt`` sites)."""
-    cols, paths = dt_rewrite_columns(df.schema, mode)
-    if not paths:
+    _check_mode(mode)
+    sites = _sites(df.schema)
+    if all(site is None for _, site in sites):
         return df
-    return df.select(*cols)
+    return df.select(*_columns(sites, mode))

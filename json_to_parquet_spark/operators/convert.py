@@ -30,7 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dt_rewrite import dt_rewrite_paths, rewrite_dt_fields
+from ..functions.dt_rewrite import dt_rewrite_paths, dt_site_columns, rewrite_dt_fields
 from ..sources.ndjson import read_ndjson_parallel, release_parallel_read
 
 # Reference default sort column (pyarrow/main.py:14: SORT_COLUMN env, default "time").
@@ -136,6 +136,8 @@ def _convert_body(
     parsed_here: bool,
 ) -> ConvertResult:
     schema_before = df.schema.simpleString()
+    # A walk over the Python schema (no py4j call): the lineage paths here,
+    # and the rewrite's Column tree is compiled once, by rewrite_dt_fields.
     rewritten = dt_rewrite_paths(df.schema)
 
     # Sort is SKIPPED, not failed, when the column is absent (reference
@@ -151,10 +153,11 @@ def _convert_body(
     # the shuffle: the sampling job then pays the JSON parse only
     # (measured 0.38 s vs 0.92 s parse+rewrite per pass on the 100k
     # bench object; full pinned convert 2.49 → ~2.0 s).  When the sort
-    # key (or a hive partition column) IS rewritten, keep the
-    # reference's convert-then-sort order (pyarrow/main.py:111,115):
-    # ISO8601 strings don't sort temporally in general.
-    rewritten_top = {p.split(".", 1)[0] for p in rewritten}
+    # key (or a hive partition column) holds a rewritten site — itself or
+    # nested in a struct, array or map — keep the reference's
+    # convert-then-sort order (pyarrow/main.py:111,115): ISO8601 strings
+    # don't sort temporally in general.
+    rewritten_top = set(dt_site_columns(df.schema))
     sort_first = (
         will_range_exchange
         and mode == "cluster"  # global coalesces to 1 — a post-coalesce

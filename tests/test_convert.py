@@ -192,3 +192,28 @@ def test_sampling_ratio_inference(spark, tmp_path):
     sampled = read_ndjson(spark, p, sampling_ratio=0.05)
     assert sampled.schema == full.schema
     assert sampled.count() == 2000  # sampling affects inference, not rows
+
+
+def test_cluster_sort_on_column_with_nested_dt_site(spark, tmp_path):
+    """A sort column that holds a ``_dt`` site only inside an array must be
+    rewritten before it is sorted: by ISO string id 1 sorts first, by
+    instant (06:00Z against 10:00+05:00 = 05:00Z) id 2 does."""
+    import glob
+    import gzip
+    import json
+
+    src = str(tmp_path / "items.ndjson.gz")
+    with gzip.open(src, "wt") as f:
+        f.write(json.dumps({"id": 1, "items": [{"t_dt": "2025-01-01T06:00:00Z"}]}) + "\n")
+        f.write(json.dumps({"id": 2, "items": [{"t_dt": "2025-01-01T10:00:00+05:00"}]}) + "\n")
+    for mode in ("cluster", "global"):
+        dest = str(tmp_path / mode)
+        res = convert(spark, src, dest, sort_column="items", mode=mode)
+        assert res.sorted_by == "items"
+        assert res.rewritten_dt_paths == ["items[].t_dt"]
+        ids = [
+            i
+            for part in sorted(glob.glob(dest + "/*.parquet"))
+            for i in pq.read_table(part, columns=["id"])["id"].to_pylist()
+        ]
+        assert ids == [2, 1], mode

@@ -139,3 +139,58 @@ def test_no_python_udf_in_plan(spark):
     )
     plan = rewrite_dt_fields(df)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
+
+
+def test_map_value_sites(spark):
+    """A struct in a map's value slot has its ``_dt`` fields rewritten and
+    reported as ``m{}.x_dt``; a ``map<string,string>`` named ``*_dt``
+    passes through, because the value slot is anonymous (as for arrays)."""
+    df = spark.createDataFrame(
+        [({"a": Row(x_dt="2025-01-01T06:00:00Z", y=1)}, {"k": "not a date"})],
+        "m map<string, struct<x_dt: string, y: long>>, s_dt map<string, string>",
+    )
+    assert dt_rewrite_paths(df.schema) == ["m{}.x_dt"]
+    out = rewrite_dt_fields(df, mode="strict")
+    assert out.schema["m"].dataType.valueType == T.StructType(
+        [T.StructField("x_dt", T.TimestampType()), T.StructField("y", T.LongType())]
+    )
+    assert out.schema["s_dt"].dataType == T.MapType(T.StringType(), T.StringType())
+    row = out.collect()[0]
+    assert row.m["a"].x_dt == datetime.datetime(2025, 1, 1, 6) and row.m["a"].y == 1
+    assert row.s_dt == {"k": "not a date"}
+
+    plain = spark.createDataFrame([({"k": "v"},)], "s_dt map<string, string>")
+    assert dt_rewrite_paths(plain.schema) == []
+    assert rewrite_dt_fields(plain, mode="strict") is plain
+
+
+def test_py4j_budget_on_findings_schema(spark, tmp_path):
+    """Finding the sites is a walk over the Python schema (no py4j round
+    trip), and the strict compile builds Columns only along the site paths
+    (~1k calls). A compile that visits every field, or builds a probe
+    subtree per array level, makes ~4k and trips the budget."""
+    from py4j.java_gateway import GatewayClient
+
+    from tests.findings_fixture import DT_PATHS, write_fixture
+
+    _, shuffled = write_fixture(str(tmp_path), n=50)
+    df = spark.read.json(shuffled)
+    schema = df.schema  # fetched (and cached on the frame) before counting
+    calls = [0]
+    orig = GatewayClient.send_command
+
+    def counting(client, *args, **kwargs):
+        calls[0] += 1
+        return orig(client, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        paths = dt_rewrite_paths(schema)
+        paths_calls, calls[0] = calls[0], 0
+        rewrite_dt_fields(df, mode="strict")
+        strict_calls = calls[0]
+    finally:
+        GatewayClient.send_command = orig
+    assert sorted(paths) == DT_PATHS
+    assert paths_calls == 0
+    assert strict_calls < 1500, strict_calls
